@@ -14,6 +14,7 @@ import hashlib
 import json
 import math
 import os
+import re
 import subprocess
 import sys
 from collections import Counter
@@ -30,35 +31,83 @@ def doc_text(spans: list[dict]) -> str:
     return "".join(s["text"] for s in spans if s["kind"] == "text")
 
 
-def nested_expected(table: pa.Table, cache_dir: str) -> tuple[dict, Counter]:
-    """``{doc_id: (n_text_spans, n_media_spans, n_tokens, n_syllables)}``
-    and the corpus word histogram, from the plain-Python tokenizer."""
+SPAN_METRICS = ("n_text_spans", "n_media_spans", "n_tokens", "n_syllables")
+# integer inputs of operators.readability; its three scores follow from them
+READ_COUNTS = ("n_words", "n_sentences", "n_syllables", "n_distinct_words")
+
+
+def readability_scores(n_words: int, n_sentences: int, n_syllables: int, n_distinct: int) -> tuple:
+    """``(type_token_ratio, flesch_reading_ease, fk_grade)`` by the
+    published formulas, as ``operators.readability`` computes them."""
+    if n_words == 0:
+        return None, None, None
+    w, s, y = float(n_words), float(n_sentences), float(n_syllables)
+    return (
+        round(n_distinct / w, 4),
+        round(206.835 - 1.015 * (w / s) - 84.6 * (y / w), 4),
+        round(0.39 * (w / s) + 11.8 * (y / w) - 15.59, 4),
+    )
+
+
+def nested_expected(table: pa.Table, cache_dir: str) -> tuple[dict, dict, Counter]:
+    """From the plain-Python tokenizer and syllable counter, per doc:
+    ``{doc_id: (n_text_spans, n_media_spans, n_tokens, n_syllables)}``
+    and the readability counts ``{doc_id: (n_words, n_sentences,
+    n_syllables, n_distinct_words)}`` (sentences: non-blank segments
+    between runs of ``.!?``, at least 1); and the corpus word histogram."""
     docs_path = os.path.join(cache_dir, "docs.parquet")
     hist_path = os.path.join(cache_dir, "hist.parquet")
     if os.path.exists(hist_path):
         d = pq.read_table(docs_path).to_pydict()
         h = pq.read_table(hist_path).to_pydict()
-        cols = ("n_text_spans", "n_media_spans", "n_tokens", "n_syllables")
-        docs = {k: v for k, v in zip(d["doc_id"], zip(*(d[c] for c in cols)))}
-        return docs, Counter(dict(zip(h["word"], h["count"])))
+        docs = dict(zip(d["doc_id"], zip(*(d[c] for c in SPAN_METRICS))))
+        read = dict(zip(d["doc_id"], zip(*(d["r_" + c] for c in READ_COUNTS))))
+        return docs, read, Counter(dict(zip(h["word"], h["count"])))
     from textalyzer_spark.functions.syllables import count_syllables
     from textalyzer_spark.functions.tokenize import tokenize_text
 
-    docs, hist = {}, Counter()
+    docs, read, hist = {}, {}, Counter()
     for doc_id, spans in zip(table.column("doc_id").to_pylist(), table.column("spans").to_pylist()):
         n_text = sum(1 for s in spans if s["kind"] == "text")
-        toks = tokenize_text(doc_text(spans))
+        text = doc_text(spans)
+        toks = tokenize_text(text)
         hist.update(toks)
-        docs[doc_id] = (n_text, len(spans) - n_text, len(toks), sum(count_syllables(t) for t in toks))
+        n_syl = sum(count_syllables(t) for t in toks)
+        docs[doc_id] = (n_text, len(spans) - n_text, len(toks), n_syl)
+        n_sent = max(1, sum(1 for seg in re.split(r"[.!?]+", text) if seg.strip(" ")))
+        read[doc_id] = (len(toks), n_sent, n_syl, len(set(toks)))
     os.makedirs(cache_dir, exist_ok=True)
     ids = list(docs)
-    cols = list(zip(*docs.values()))
-    names = ["n_text_spans", "n_media_spans", "n_tokens", "n_syllables"]
-    pq.write_table(pa.table({"doc_id": ids, **{n: list(c) for n, c in zip(names, cols)}}), docs_path)
+    cols = {n: list(c) for n, c in zip(SPAN_METRICS, zip(*docs.values()))}
+    cols.update({"r_" + n: list(c) for n, c in zip(READ_COUNTS, zip(*read.values()))})
+    pq.write_table(pa.table({"doc_id": ids, **cols}), docs_path)
     words = sorted(hist)
     pq.write_table(pa.table({"word": words, "count": [hist[w] for w in words]}), hist_path + ".tmp")
     os.replace(hist_path + ".tmp", hist_path)
-    return docs, hist
+    return docs, read, hist
+
+
+def check_readability(out: pa.Table, expected: dict) -> int:
+    """Per doc of ``span_readability``'s output: present exactly once,
+    counts equal to the plain-Python reference, scores within the last
+    rounded digit (Spark rounds half up, Python half to even)."""
+    seen: Counter = Counter()
+    bad = 0
+    names = ("doc_id", *READ_COUNTS, "type_token_ratio", "flesch_reading_ease", "fk_grade")
+    for doc_id, *vals in zip(*(out.column(c).to_pylist() for c in names)):
+        seen[doc_id] += 1
+        if seen[doc_id] > 1 or doc_id not in expected:
+            continue
+        want = expected[doc_id]
+        scores = readability_scores(*want)
+        ok = tuple(vals[:4]) == tuple(want) and all(
+            (g is None) == (e is None) and (g is None or abs(g - e) <= 1.01e-4) for g, e in zip(vals[4:], scores)
+        )
+        bad += int(not ok)
+    bad += sum(n - 1 for n in seen.values())  # duplicated docs
+    bad += sum(1 for d in seen if d not in expected)  # docs not in the input
+    bad += sum(1 for d in expected if d not in seen)  # lost docs
+    return bad
 
 
 def check_span_output(out: pa.Table, inp: pa.Table, expected: dict) -> int:
@@ -68,7 +117,7 @@ def check_span_output(out: pa.Table, inp: pa.Table, expected: dict) -> int:
     in_spans = dict(zip(inp.column("doc_id").to_pylist(), inp.column("spans").to_pylist()))
     seen: Counter = Counter()
     bad = 0
-    cols = [out.column(c).to_pylist() for c in ("doc_id", "spans", "n_text_spans", "n_media_spans", "n_tokens", "n_syllables")]
+    cols = [out.column(c).to_pylist() for c in ("doc_id", "spans", *SPAN_METRICS)]
     for doc_id, spans, *metrics in zip(*cols):
         seen[doc_id] += 1
         if seen[doc_id] > 1:

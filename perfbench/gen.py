@@ -9,7 +9,9 @@ the files written here.
   with a Zipf vocabulary larger than the ``count_syllables`` memo, a
   share of non-ASCII documents, 1-4 text spans split at whitespace
   boundaries, a media span after ~20% of text spans and one document
-  ~1000x the median length.
+  holding ``LONGEST_TOKEN_SHARE`` of all tokens (at ~300k documents
+  of ~120 tokens that is ~1000x the median length; here it is less,
+  so the one long document adds skew without setting a stage's time).
 * the ``flat`` corpora (``dedup_pipeline`` and its small
   ``dedup_canary``): ``documents.parquet`` with the sf-tier columns
   ``(doc_id, text, lang, source, n_chars)``, exact duplicates,
@@ -58,7 +60,13 @@ _NA_SYLLABLES = (
 ).split()
 
 # --- corpus sizes (documents) -------------------------------------------
-SIZES = {"extract_bulk": 5_000, "dedup_pipeline": 1_500, "dedup_canary": 60}
+SIZES = {"extract_bulk": 3_000, "dedup_pipeline": 1_500, "dedup_canary": 60}
+VERSION = 3  # bump when a generator's output changes: it keys the cached inputs
+LONGEST_TOKEN_SHARE = 0.003  # tokens of the nested corpus in its longest document
+NESTED_VOCAB = 4 * MEMO_SIZE  # Zipf vocabulary of the nested corpus
+# Zipf exponent of the nested corpus: flat enough that its few hundred
+# thousand tokens hold more distinct words than the memo has entries
+NESTED_ZIPF = 0.9
 _STREAM = {"extract_bulk": 1, "dedup_pipeline": 2, "dedup_canary": 4}  # seed stream per corpus
 
 
@@ -122,7 +130,7 @@ def _token_strings(
     number of distinct words drawn."""
     v = len(vocab)
     total = int(lengths.sum())
-    ids = _zipf_ids(rng, v, total, 1.0)
+    ids = _zipf_ids(rng, v, total, NESTED_ZIPF)
     # variants: 0 plain, 1 "word." (sentence end), 2 "Word" (sentence start)
     ends = rng.random(total) < 1 / 14
     starts = np.zeros(total, dtype=bool)
@@ -141,10 +149,12 @@ def _token_strings(
 
 def nested_corpus(corpus: str, seed: int, n_docs: int) -> tuple[pa.Table, dict]:
     rng = _rng(corpus, seed)
-    vocab = _ascii_vocab(rng, 3 * MEMO_SIZE)
+    vocab = _ascii_vocab(rng, NESTED_VOCAB)
     na_vocab = _syllable_words(rng, 20_000, _NA_SYLLABLES, 2, 4)
     lengths = _doc_lengths(rng, n_docs, 120, 0.5, 8, 1200)
-    lengths[int(rng.integers(n_docs))] = 1000 * 120  # the one huge document
+    long_doc = int(rng.integers(n_docs))
+    rest = int(lengths.sum() - lengths[long_doc])
+    lengths[long_doc] = round(rest * LONGEST_TOKEN_SHARE / (1 - LONGEST_TOKEN_SHARE))
     na_docs = rng.random(n_docs) < 0.10
     tokens, uniq = _token_strings(rng, lengths, vocab, na_vocab, na_docs)
     n_spans = rng.integers(1, 5, size=n_docs)
@@ -183,6 +193,7 @@ def nested_corpus(corpus: str, seed: int, n_docs: int) -> tuple[pa.Table, dict]:
         "median_doc_tokens": float(statistics.median(lengths.tolist())),
         "longest_doc_tokens": int(lengths.max()),
         "longest_over_median": round(float(lengths.max() / np.median(lengths)), 1),
+        "longest_doc_token_share": round(float(lengths.max() / lengths.sum()), 4),
         "spans": sum(len(s) for s in spans_col),
         "media_spans": sum(1 for s in spans_col for x in s if x["kind"] == "media"),
     }

@@ -55,17 +55,22 @@ class Tracer:
             for s in self.spans:
                 f.write(json.dumps(s, sort_keys=True) + "\n")
 
-    def self_times(self) -> dict[str, float]:
+    def self_times(self, under: str | None = None) -> dict[str, float]:
         """Seconds per span name, minus the time its child spans cover
-        (children are sequential, so their durations simply add)."""
+        (children are sequential, so their durations simply add).
+        ``under``: only spans named so and their descendants."""
         child: dict[int, float] = {}
-        for s in self.spans:
+        inside: set[int] = set()
+        for s in self.spans:  # a parent is recorded before its children
             if s["parent"] is not None:
                 child[s["parent"]] = child.get(s["parent"], 0.0) + s["end"] - s["start"]
+            if under is None or s["name"] == under or s["parent"] in inside:
+                inside.add(s["id"])
         out: dict[str, float] = {}
         for s in self.spans:
-            own = s["end"] - s["start"] - child.get(s["id"], 0.0)
-            out[s["name"]] = out.get(s["name"], 0.0) + own
+            if s["id"] in inside:
+                own = s["end"] - s["start"] - child.get(s["id"], 0.0)
+                out[s["name"]] = out.get(s["name"], 0.0) + own
         return out
 
 
@@ -105,6 +110,27 @@ class SparkCounts:
         self.sc.setJobGroup("bench-idle", "bench-idle")
         self.seconds += time.perf_counter() - t0
         return {"jobs": len(jobs), "stages": stages, "tasks": tasks, "tasks_failed": failed}
+
+
+class HeapPeak:
+    """Peak JVM heap in use since construction: the sum of the heap
+    memory pools' peak usage, read through the JVM's management beans.
+    Pools peak at different moments, so this bounds the true peak from
+    above. Unlike resident size it excludes heap the JVM reserved but
+    never filled, though the young pools' peaks still follow the sizes
+    the collector chose for them."""
+
+    def __init__(self, spark):
+        jvm = spark.sparkContext._jvm
+        mtype = jvm.java.lang.management.MemoryType.HEAP
+        self.pools = [
+            p for p in jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans() if p.getType().equals(mtype)
+        ]
+        for p in self.pools:
+            p.resetPeakUsage()
+
+    def peak(self) -> int:
+        return sum(p.getPeakUsage().getUsed() for p in self.pools)
 
 
 def _children() -> dict[int, list[int]]:

@@ -1,7 +1,7 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload extract_bulk --seed 1 --seconds 10 --trace 0
-    python3 perfbench/run.py --workload dedup_pipeline --seed 1 --seconds 10 --trace 1
+    python3 perfbench/run.py --workload extract_bulk --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload dedup_pipeline --seed 1 --seconds 8 --trace 1
     python3 perfbench/run.py --self-test
 
 Run from the root of a source checkout. It generates the workload's
@@ -13,12 +13,13 @@ client for ``--seconds``, checks every output, and prints each metric
 by name with its unit.
 
 End-to-end metrics: ``docs_per_s`` (input documents processed per
-second over the timed iterations), ``setup_s`` (median of ``SETUPS``
-set-ups: session start, package shipping, a job touching every Python
-worker; only the first also starts the JVM) and ``peak_rss_mb`` (this
-process, the JVM and the Python workers, sampled from ``/proc``). Also
-printed: ``ops_failed_ratio`` (failed calls and Spark tasks over those
-attempted) and ``output_mismatches`` (failed output checks).
+second by the median timed iteration), ``setup_s`` (median of ``SETUPS``
+set-ups, each cold: JVM launch, session start, package shipping, a job
+touching every Python worker) and ``peak_rss_mb`` (this process, the
+JVM and the Python workers, sampled from ``/proc`` over the warm-up and
+timed iterations; the JVM runs with the program's own memory settings).
+Also printed: ``ops_failed_ratio`` (failed calls and Spark tasks over
+those attempted) and ``output_mismatches`` (failed output checks).
 
 The last line of standard output is one JSON object: ``{"correct",
 "attempted", "failed", "metrics"}``; the metrics are the end-to-end
@@ -50,7 +51,7 @@ WORK = os.path.join(ROOT, ".perfbench_work")
 
 DEFAULT_SEED = 1
 HELDOUT_SEED = 9001  # keep for confirming a claimed gain; never tune on it
-SETUPS = 3  # set-ups per run; setup_s is their median
+SETUPS = 2  # cold set-ups per run; setup_s is their median
 
 END_TO_END = {"docs_per_s": "1/s", "setup_s": "s", "peak_rss_mb": "MB"}
 PER_LAYER = {
@@ -93,6 +94,7 @@ PER_LAYER = {
     "lineage.bytes_out_per_byte_in": "ratio",
     "spark.jobs": "count",
     "spark.tasks_failed": "count",
+    "jvm.heap_peak_used_mb": "MB",
     "trace.overhead_s": "s",
 }
 
@@ -104,21 +106,23 @@ def isolate_io() -> None:
     os.makedirs(tmp, exist_ok=True)
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(WORK, "spark-local")
-    mem = os.environ.setdefault("SPARK_DRIVER_MEM", "2g")
-    # a fixed-size heap, touched in full at start: the JVM's resident
-    # size then does not depend on when the collector grew the heap or
-    # first used a region, and peak_rss_mb moves with off-heap JVM
-    # memory and the Python processes
+    # The heap keeps the program's own limit (spark.driver.memory) and
+    # is neither sized up front nor pre-touched. GCTimeRatio=1: G1 grows
+    # the heap when what it holds needs the room, not whenever collection
+    # pauses pass 8% of wall time (the default). On a shared host that
+    # share follows other tenants' load, and with it the peak_rss_mb of
+    # the same code spread by a quarter of its median across runs.
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        f"--driver-java-options '-Xms{mem} -XX:+AlwaysPreTouch -Djava.io.tmpdir={tmp} -XX:-UsePerfData' "
+        f"--driver-java-options '-Djava.io.tmpdir={tmp} -XX:-UsePerfData -XX:GCTimeRatio=1' "
         "--conf spark.ui.showConsoleProgress=false "
         f"--conf spark.sql.warehouse.dir={os.path.join(WORK, 'warehouse')} pyspark-shell"
     )
 
 
 def start_session(cores: int):
-    """One set-up: session start with package shipping, then a job
-    that imports the tokenizer in every Python worker."""
+    """One cold set-up: JVM launch and session start with package
+    shipping, then a job that imports the tokenizer in every Python
+    worker. No JVM may be running (see ``stop_session``)."""
     from textalyzer_spark.session import get_spark
 
     t0 = time.perf_counter()
@@ -140,17 +144,17 @@ def start_session(cores: int):
     return spark, t1 - t0, time.perf_counter() - t1
 
 
-def stop_session(spark, final: bool) -> None:
-    """Stop Spark. ``final``: also shut the JVM down and wait until it
-    and its Python workers have ended; otherwise the next set-up reuses
-    the running JVM."""
+def stop_session(spark) -> None:
+    """Stop Spark, shut the JVM down and wait until it and its Python
+    workers have ended, so the next ``start_session`` is cold: it
+    launches a new JVM and ships a newly built package."""
+    import tempfile
+
     from pyspark import SparkContext
 
     import obs
 
     spark.stop()
-    if not final:
-        return
     gw = SparkContext._gateway
     proc = getattr(gw, "proc", None)
     if gw is not None:
@@ -158,6 +162,11 @@ def stop_session(spark, final: bool) -> None:
     if proc is not None:
         proc.stdin.close()
         proc.wait(timeout=60)
+    SparkContext._gateway = SparkContext._jvm = None
+    # shipping.ship_package builds this zip once per driver process
+    zip_path = os.path.join(tempfile.gettempdir(), f"textalyzer_spark_{os.getpid()}.zip")
+    if os.path.exists(zip_path):
+        os.remove(zip_path)
     deadline = time.monotonic() + 20
     while len(obs.process_tree(os.getpid())) > 1:
         if time.monotonic() > deadline:
@@ -248,28 +257,32 @@ def main(argv: list[str] | None = None) -> int:
     counts = obs.SparkCounts(spark)
     calls = Calls(spark, tracer, counts)
     layer: dict[str, float] = {}
+    heap = obs.HeapPeak(spark)
     with obs.RssSampler() as rss:
         wl.warm_up(calls)
         calls.stats = {}  # warm-up times are not measurements
         phase("warm_up")
         walls, t_walls, outputs = closed_loop(wl, calls, counts, args.seconds, bool(args.trace))
         phase("timed")
-        mismatches = wl.check(calls, outputs)
-        phase("check")
-        if args.trace:
-            layer["spark.jobs"] = sum(r.get("jobs", 0) for recs in calls.stats.values() for r in recs) / len(t_walls)
-            tracer.enabled = True
-            with tracer.span("layers"):
-                layer.update(wl.layers(calls))
-            phase("layers")
+    # the workload's memory: the checks and traced layer passes below
+    # are the benchmark's own work
     peak_rss_mb = rss.peak / 2**20
+    layer["jvm.heap_peak_used_mb"] = heap.peak() / 2**20
+    mismatches = wl.check(calls, outputs)
+    phase("check")
+    if args.trace:
+        layer["spark.jobs"] = sum(r.get("jobs", 0) for recs in calls.stats.values() for r in recs) / len(t_walls)
+        tracer.enabled = True
+        with tracer.span("layers"):
+            layer.update(wl.layers(calls))
+        phase("layers")
     mismatches += wl.mismatches
 
+    stop_session(spark)
     for _ in range(SETUPS - 1):
-        stop_session(spark, final=False)
         spark, a, b = start_session(cores)
         setups.append(a + b)
-    stop_session(spark, final=True)
+        stop_session(spark)
     phase("setups_and_stop")
 
     for recs in calls.stats.values():
@@ -279,16 +292,16 @@ def main(argv: list[str] | None = None) -> int:
     attempted = calls.attempted + calls.tasks + calls.tasks_failed
     failed = calls.failed + calls.tasks_failed
     e2e = {
-        # work completed per second over the whole timed window: with
-        # 2-3 iterations of a few seconds, a median would jump with the
-        # count that happened to fit
-        "docs_per_s": wl.docs * len(walls) / sum(walls),
+        # the median timed iteration: with three or more, one slowed
+        # by the host does not move it
+        "docs_per_s": wl.docs / statistics.median(walls),
         "setup_s": statistics.median(setups),
         "peak_rss_mb": peak_rss_mb,
     }
     print(f"workload {args.workload} seed {args.seed} cores {cores} iterations_s {[round(w, 3) for w in walls]}")
     print("input " + json.dumps(wl.props, sort_keys=True))
-    print("peak_rss_mb_by_command " + json.dumps({k: round(v / 2**20) for k, v in rss.peak_by_command.items()}))
+    print("peak_rss_mb_by_command " + json.dumps({k: round(v / 2**20) for k, v in rss.peak_by_command.items()})
+          + f" jvm_heap_peak_used_mb {layer['jvm.heap_peak_used_mb']:.0f}")
     print("phases_s " + json.dumps(phases) + " setups_s " + json.dumps([round(x, 3) for x in setups]))
     shown = {**e2e, "ops_failed_ratio": failed / attempted, "output_mismatches": mismatches}
     units = {**END_TO_END, "ops_failed_ratio": "ratio", "output_mismatches": "count"}
@@ -331,6 +344,10 @@ def report_trace(tracer, calls, metrics, workload, run_id) -> None:
     by_layer: dict[str, float] = {}
     for name, s in self_s.items():
         by_layer[name.split(".")[0]] = by_layer.get(name.split(".")[0], 0.0) + s
+    # where the traced timed iterations spend their time
+    in_iter = tracer.self_times(under="iteration")
+    total = sum(in_iter.values())
+    share = {k: round(v / total, 4) for k, v in sorted(in_iter.items(), key=lambda kv: -kv[1]) if v >= total / 1000}
     split = {}
     for name, recs in calls.stats.items():
         counted = [r for r in recs if "jobs" in r]
@@ -342,6 +359,7 @@ def report_trace(tracer, calls, metrics, workload, run_id) -> None:
                 "counts_repeat": all(tuple(r[k] for k in keys) == tuple(counted[0][k] for k in keys) for r in counted),
             }
     rollup = {"workload": workload, "run_id": run_id, "self_s_by_layer": by_layer, "self_s_by_span": self_s,
+              "iteration_self_share_by_span": share,
               "spark_counts_by_call": split, "counting_s": calls.counts.seconds}
     with open(os.path.join(out_dir, f"{run_id}.rollup.json"), "w") as f:
         json.dump(rollup, f, indent=1, sort_keys=True)
@@ -350,6 +368,7 @@ def report_trace(tracer, calls, metrics, workload, run_id) -> None:
     print("self time by layer (s):")
     for k, v in sorted(by_layer.items(), key=lambda kv: -kv[1]):
         print(f"  {k:<24} {v:10.3f}")
+    print("share of the traced iterations' self time by span: " + json.dumps(share))
     print("spark counts by call (last call; repeat = identical on every traced call):")
     for k, v in split.items():
         print(f"  {k:<48} jobs {v['jobs']:>4} stages {v['stages']:>4} tasks {v['tasks']:>5} "

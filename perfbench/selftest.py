@@ -19,14 +19,23 @@ import gen
 def _span_output(table: pa.Table, expected: dict) -> pa.Table:
     ids = table.column("doc_id").to_pylist()
     cols = list(zip(*(expected[d] for d in ids)))
-    names = ["n_text_spans", "n_media_spans", "n_tokens", "n_syllables"]
-    return pa.table({"doc_id": ids, "spans": table.column("spans"), **{n: list(c) for n, c in zip(names, cols)}})
+    return pa.table({"doc_id": ids, "spans": table.column("spans"), **{n: list(c) for n, c in zip(checks.SPAN_METRICS, cols)}})
+
+
+def _readability_output(table: pa.Table, read: dict) -> pa.Table:
+    ids = table.column("doc_id").to_pylist()
+    rows = [
+        dict(zip(("doc_id", *checks.READ_COUNTS), (d, *read[d])))
+        | dict(zip(("type_token_ratio", "flesch_reading_ease", "fk_grade"), checks.readability_scores(*read[d])))
+        for d in ids
+    ]
+    return pa.Table.from_pylist(rows)
 
 
 def cases(work: str):
     """``(name, mismatches counted, mismatches planted)``."""
     table, _ = gen.nested_corpus("extract_bulk", 1, 300)
-    expected, hist = checks.nested_expected(table, os.path.join(work, "selftest", "expected"))
+    expected, read, hist = checks.nested_expected(table, os.path.join(work, "selftest", f"expected-v{gen.VERSION}"))
     good = _span_output(table, expected)
     yield "spans: correct output", checks.check_span_output(good, table, expected), 0
 
@@ -37,6 +46,16 @@ def cases(work: str):
     del rows[9]  # lost doc
     bad = pa.Table.from_pylist(rows, schema=good.schema)
     yield "spans: metric, span text, duplicate, loss", checks.check_span_output(bad, table, expected), 4
+
+    good_read = _readability_output(table, read)
+    yield "readability: correct output", checks.check_readability(good_read, read), 0
+    rows = good_read.to_pylist()
+    rows[2]["n_sentences"] += 1  # wrong count
+    rows[4]["fk_grade"] += 0.01  # wrong score
+    rows.append(dict(rows[6]))  # duplicated doc
+    del rows[8]  # lost doc
+    bad = pa.Table.from_pylist(rows, schema=good_read.schema)
+    yield "readability: count, score, duplicate, loss", checks.check_readability(bad, read), 4
 
     ordered = sorted(hist.items(), key=lambda wc: (-wc[1], wc[0]))
     yield "histogram: correct output", checks.check_histogram(ordered, hist), 0

@@ -31,6 +31,10 @@ KILL_AFTER = 2
 CANARY_SEED = 0  # the oracle-checked canary corpus is the same on every run
 
 
+def collect(df):
+    return df.columns, df.collect()
+
+
 def noop(df):
     """Execute a plan fully without moving its rows into this process;
     return it for the next layer."""
@@ -122,7 +126,7 @@ class Workload:
     def __init__(self, seed: int, work: str):
         self.seed = seed
         self.work = work
-        self.key = f"{self.name}-{seed}-{gen.SIZES[self.name]}"
+        self.key = f"{self.name}-{seed}-{gen.SIZES[self.name]}-v{gen.VERSION}"
         self.in_dir = os.path.join(work, "inputs", self.key)
         self.data_dir = os.path.join(self.in_dir, "data")
         self.mismatches = 0
@@ -150,12 +154,14 @@ class ExtractBulk(Workload):
     def prepare(self) -> None:
         super().prepare()
         self.table = pq.read_table(self.data_dir)
-        self.expected, self.hist = checks.nested_expected(self.table, os.path.join(self.work, "expected", self.key))
+        self.expected, self.read_expected, self.hist = checks.nested_expected(
+            self.table, os.path.join(self.work, "expected", self.key)
+        )
         self.lineage_dir = os.path.join(self.work, "out", "lineage")
 
     def warm_up(self, calls: Calls) -> None:
         # two passes: during the first the JIT and each Python worker's
-        # syllable memo are still filling, and the next pass is ~15% faster
+        # syllable memo are still filling, and the next pass is ~20% faster
         for _ in range(2):
             self.iteration(calls)
 
@@ -169,7 +175,7 @@ class ExtractBulk(Workload):
         rows = calls(
             "spans.span_word_frequency",
             lambda: spans.span_word_frequency(nested),
-            lambda df: [(r["word"], r["count"]) for r in df.collect()],
+            lambda df: [tuple(r) for r in df.collect()],  # (word, count)
         )
         text = calls("formatting.format_freq_map", lambda: format_freq_map(rows or []))
         calls("spans.span_readability", lambda: spans.span_readability(nested), noop)
@@ -178,12 +184,15 @@ class ExtractBulk(Workload):
     def check(self, calls: Calls, outputs) -> int:
         from textalyzer_spark.operators import spans
 
-        rows, text = outputs[-1]
-        self.rows_out = len(rows or [])
-        bad = checks.check_histogram(rows or [], self.hist)
-        bad += int(text is None or text.count("\n") != len(rows or []))
-        out = spans.process_spans_arrow(calls.spark.read.parquet(self.data_dir)).toArrow()
-        return bad + checks.check_span_output(out, self.table, self.expected)
+        bad = 0
+        for rows, text in outputs:  # every timed iteration's histogram
+            bad += checks.check_histogram(rows or [], self.hist)
+            bad += int(text is None or text.count("\n") != len(rows or []))
+        self.rows_out = len(outputs[-1][0] or [])
+        nested = calls.spark.read.parquet(self.data_dir)
+        out = spans.process_spans_arrow(nested).toArrow()
+        bad += checks.check_span_output(out, self.table, self.expected)
+        return bad + checks.check_readability(spans.span_readability(nested).toArrow(), self.read_expected)
 
     def layers(self, calls: Calls) -> dict[str, float]:
         spark = calls.spark
@@ -258,7 +267,7 @@ class DedupPipeline(Workload):
         super().prepare()
         table = pq.read_table(os.path.join(self.data_dir, "documents.parquet"))
         self.texts = dict(zip(table.column("doc_id").to_pylist(), table.column("text").to_pylist()))
-        key = f"dedup_canary-{CANARY_SEED}-{gen.SIZES['dedup_canary']}"
+        key = f"dedup_canary-{CANARY_SEED}-{gen.SIZES['dedup_canary']}-v{gen.VERSION}"
         canary = os.path.join(self.work, "inputs", key)
         gen.generate("dedup_canary", CANARY_SEED, canary)
         self.canary_dir = os.path.join(canary, "data")
@@ -273,7 +282,7 @@ class DedupPipeline(Workload):
             out[g] = calls(
                 f"gates.{g}",
                 lambda g=g: qs[g](calls.spark, sf_dir),
-                lambda df: (df.columns, df.collect()),
+                collect,
             )
         return out
 
@@ -302,7 +311,7 @@ class DedupPipeline(Workload):
             passing = quality_score(docs).filter(f"quality_score >= {entry.PIPELINE_QMIN}").count()
             gen.add_properties(self.in_dir, self.props, quality_pass_share=round(passing / self.docs, 4))
         bad = 0
-        first = {}
+        first = self.gate_fp = {}
         for out in outputs:
             for g, res in out.items():
                 if res is None:
@@ -322,7 +331,10 @@ class DedupPipeline(Workload):
         layer's build/run time and job count can be read separately.
         A layer's ``run`` re-executes its un-materialized upstream. This
         mirrors ``__spark_entry__``'s gate bodies with its own helpers
-        and parameters: a change to a gate's body belongs here too."""
+        and parameters; the last layer of ``incremental_keep_quality``
+        and of ``duplicate_blocks_resolved`` is collected and must equal
+        its gate's output, so a copy that drifts from its gate is
+        counted as a mismatch."""
         from pyspark.sql import functions as F
 
         import __spark_entry__ as entry
@@ -356,12 +368,19 @@ class DedupPipeline(Workload):
             noop,
         )
         q_all = catq.select("doc_id", "quality_score").unionByName(quality_score(new).select("doc_id", "quality_score"))
-        calls("near_dedup.quality_keep", lambda: quality_keep(labels, q_all), lambda df: df.collect())
-        calls(
+        kept = calls("near_dedup.quality_keep", lambda: quality_keep(labels, q_all), collect)
+        blocks = calls(
             "duplication.duplicate_blocks",
             lambda: duplicate_blocks(entry._line_structured_docs(spark, sf), min_lines=3, resolve=True),
-            noop,
+            lambda df: collect(
+                df.select("content", F.explode("locations").alias("l")).select(
+                    "content", F.col("l.doc_id").alias("doc_id"), F.col("l.line").alias("line")
+                )
+            ),
         )
+        for gate, out in (("incremental_keep_quality", kept), ("duplicate_blocks_resolved", blocks)):
+            same = out is not None and checks.fingerprint(checks.gate_rows(*out)) == self.gate_fp.get(gate)
+            self.mismatches += int(not same)
         return {}
 
 
