@@ -114,6 +114,33 @@ def test_dsir_oracle_mirror_planted(spark):
     assert got == want
 
 
+def test_dsir_featureless_batch_keeps_schema(spark):
+    """A batch in which no document yields a bucket comes back empty
+    with the declared schema, for string and bigint ids; dsir_weights
+    over it keeps every row at weight 0."""
+    from textalyzer_spark.operators.selection import _doc_bucket_counts
+
+    for id_type, ids in (("string", ["a", "b", "c"]), ("bigint", [1, 2, 3])):
+        df = spark.createDataFrame(
+            list(zip(ids, ["", " \t\n", None], [True, False, None])),
+            f"doc_id {id_type}, text string, is_target boolean",
+        )
+        out = _doc_bucket_counts(df, 64, "doc_id", "text")
+        assert out.schema.simpleString() == (
+            f"struct<doc_id:{id_type},is_target:boolean,bucket:bigint,cnt:bigint>"
+        )
+        tbl = out.toArrow()
+        assert tbl.num_rows == 0
+        assert [str(t) for t in tbl.schema.types] == [
+            "string" if id_type == "string" else "int64", "bool", "int64", "int64",
+        ]
+        got = sorted(
+            tuple(r)
+            for r in dsir_weights(df, F.col("is_target"), n_buckets=64).collect()
+        )
+        assert got == [(i, 0, 0, True) for i in ids]
+
+
 def test_bm25_plan_shape(spark):
     """Scale pin: the idf join is broadcast and the top-k is
     TakeOrderedAndProject (no global sort of the scored corpus)."""

@@ -33,22 +33,33 @@ def _round_half_away(x: float) -> int:
 def format_freq_map(rows: list[tuple[str, int]]) -> str:
     """Render (word, count) rows — pass them pre-sorted (count desc,
     word asc: the pinned tie order; the reference sorts count desc
-    only and its byte-count golden is tie-order-invariant)."""
+    only and its byte-count golden is tie-order-invariant).
+
+    The bar math is vectorized f32, as in frequency.rs:76-77: the
+    scale ``f32(remaining) / f32(highest)`` is computed once, multiplied
+    by every f32 count in one numpy expression, then rounded half away
+    from zero in f64 — per element the same IEEE operations as a
+    scalar loop, so the output is byte-identical to one. Counts reach
+    f32 through f64, as ``np.float32(int)`` does.
+    """
     if not rows:
         return ""
-    max_word_w = max(str_display_width(w) for w, _ in rows)
-    highest = max(c for _, c in rows)
+    words = [w for w, _ in rows]
+    counts = [c for _, c in rows]
+    widths = [str_display_width(w) for w in words]
+    max_word_w = max(widths)
+    highest = max(counts)
     max_num_w = len(str(highest))
     remaining = MAX_LINE_LENGTH - (max_word_w + 2 + max_num_w + 2)
-    out = []
-    rem32 = np.float32(remaining)
-    high32 = np.float32(highest)
-    for word, count in rows:
-        # reference computes the bar in f32 (frequency.rs:76-77)
-        bar_w = _round_half_away(float(rem32 / high32 * np.float32(count)))
-        pad_w = max_word_w - str_display_width(word)
-        out.append(f"{' ' * pad_w}{word}  {str(count).rjust(max_num_w)}  {BAR * bar_w}\n")
-    return "".join(out)
+    scale = np.float32(remaining) / np.float32(highest)
+    bar = (np.asarray(counts, dtype=np.float64).astype(np.float32) * scale).astype(np.float64)
+    bar_ws = np.where(bar >= 0, np.floor(bar + 0.5), -np.floor(-bar + 0.5))
+    return "".join(
+        [
+            f"{' ' * (max_word_w - ww)}{w}  {str(c).rjust(max_num_w)}  {BAR * b}\n"
+            for w, ww, c, b in zip(words, widths, counts, bar_ws.astype(np.int64).tolist())
+        ]
+    )
 
 
 def format_line_length_histogram(rows: list[tuple[int, int]]) -> str:

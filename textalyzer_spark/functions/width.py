@@ -39,7 +39,11 @@ def _char_width(ch: str) -> int:
 
 
 def str_display_width(s: str) -> int:
-    """Display width of one string (plain-Python, used by tests)."""
+    """Display width of one string. Printable ASCII is one column per
+    character, so it skips the per-character lookup; C0 controls and
+    DEL (not printable) still take it and count 0."""
+    if s.isascii() and s.isprintable():
+        return len(s)
     return sum(_char_width(ch) for ch in s)
 
 

@@ -121,8 +121,8 @@ def _doc_bucket_counts(
                 cnts.extend(c.values())
             yield pd.DataFrame(
                 {
-                    "doc_id": ids,
-                    "is_target": tgts,
+                    "doc_id": pd.Series(ids, dtype="object"),
+                    "is_target": pd.Series(tgts, dtype="object"),
                     "bucket": pd.Series(bks, dtype="int64"),
                     "cnt": pd.Series(cnts, dtype="int64"),
                 }
