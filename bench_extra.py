@@ -3,7 +3,10 @@
 NOT the frozen driver bench (bench.py) — this is the round-8
 optimization loop's instrument: time any subset of the registered
 queries with the noop sink, capture .explain("formatted") for each,
-and print per-query medians as JSON.
+and print per-query medians as JSON. ``codegen_compiles`` lists, per
+query, the generated classes compiled in each rep: the first rep
+fills the codegen cache, so a non-zero count in a later rep names a
+query that recompiles when warm.
 
 Usage:
     python bench_extra.py [--reps N] [--plans plans/r08 --tag before]
@@ -35,7 +38,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    from textalyzer_spark.session import get_spark
+    from textalyzer_spark.session import codegen_compile_count, get_spark
 
     spark = get_spark("textalyzer-bench-extra", cores=cpus,
                       shuffle_partitions=cpus)
@@ -64,6 +67,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
+    compiles: dict[str, list[int]] = {}
     for name in names:
         if args.plans:
             import contextlib
@@ -75,18 +79,22 @@ def main() -> None:
                 df.explain("formatted")
             with open(f"{args.plans}/{name}_{args.tag}.txt", "w") as f:
                 f.write(buf.getvalue())
-        reps = []
+        reps, classes = [], []
         for _ in range(args.reps):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+            c0 = codegen_compile_count(spark)
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             reps.append(round(time.perf_counter() - t0, 3))
+            classes.append(codegen_compile_count(spark) - c0)
         spark.sparkContext.setJobDescription(None)
         timings[name] = round(statistics.median(reps), 3)
         samples[name] = reps
-        print(f"  {name}: {timings[name]} {reps}", file=sys.stderr)
+        compiles[name] = classes
+        print(f"  {name}: {timings[name]} {reps} compiled {classes}",
+              file=sys.stderr)
 
     result = {
         "metric": "bench_extra_seconds",
@@ -94,6 +102,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "samples": samples,
+        "codegen_compiles": compiles,
         "sf": sf_dir.rstrip("/").rsplit("sf", 1)[-1],
         "cpus": cpus,
     }

@@ -62,7 +62,7 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert out[0]["jaccard"] == pytest.approx(round(7 / 9, 4))
 
 
-def test_minhash_lsh_recall_vs_exact(spark):
+def _pair_corpus(spark):
     # 30 docs: 10 near-dup pairs (high jaccard) + 10 unrelated
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(200)]
@@ -75,7 +75,11 @@ def test_minhash_lsh_recall_vs_exact(spark):
         rows.append((f"p{i}b", " ".join(words2)))
     for i in range(10):
         rows.append((f"u{i}", " ".join(rng.sample(vocab, 30))))
-    df = spark.createDataFrame(rows, "doc_id string, text string")
+    return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+def test_minhash_lsh_recall_vs_exact(spark):
+    df = _pair_corpus(spark)
     exact = {
         (r["doc_a"], r["doc_b"])
         for r in ngram_jaccard_pairs(df, k=3, threshold=0.5).collect()
@@ -87,6 +91,25 @@ def test_minhash_lsh_recall_vs_exact(spark):
     assert lsh <= exact          # exact verification → perfect precision
     assert len(lsh) >= 0.8 * len(exact)  # S-curve recall at t=0.5 is ~0.93
     assert len(exact) >= 8
+
+
+def test_minhash_lsh_caller_buckets_or_sigs_without_shingles(spark):
+    """``buckets=`` or ``sigs=`` with ``shingles=None``: the kernel
+    pass then emits no signature rows of its own, and the verified
+    pairs are those of the default path."""
+    from textalyzer_spark.operators.dedup import _band_buckets
+
+    df = _pair_corpus(spark)
+
+    def pairs(out):
+        return sorted(tuple(r) for r in out.collect())
+
+    default = pairs(minhash_lsh_pairs(df, k=3, threshold=0.5))
+    sigs = minhash_signatures(df, k=3, num_hashes=64, seed=42)
+    buckets = _band_buckets(sigs, bands=16, rows=4)
+    assert len(default) >= 8
+    assert pairs(minhash_lsh_pairs(df, k=3, threshold=0.5, buckets=buckets)) == default
+    assert pairs(minhash_lsh_pairs(df, k=3, threshold=0.5, sigs=sigs)) == default
 
 
 def test_simhash_properties(spark):

@@ -446,15 +446,19 @@ def minhash_lsh_pairs(
         # affine-min aggregation shuffle + its own checkpoint are gone
         # (round 8: these gates are bounded by job/barrier count at
         # bench scale, and at cluster scale it is one less pass over
-        # the derived shingle table)
+        # the derived shingle table). Signature rows only when no
+        # caller-supplied sigs/buckets cut the bands — otherwise they
+        # would be computed, checkpointed and never read.
+        with_sigs = sigs is None and buckets is None
         raw = _distinct_shingles(
             df, k, id_col, text_col, with_base_hash=True,
-            sig_params=(num_hashes, seed),
+            sig_params=(num_hashes, seed) if with_sigs else None,
         ).localCheckpoint()
-        sh = raw.filter(F.col("shingle").isNotNull()).select(
-            "doc_id", "shingle", "x"
-        )
-        if sigs is None and buckets is None:
+        sh = raw
+        if with_sigs:
+            sh = raw.filter(F.col("shingle").isNotNull()).select(
+                "doc_id", "shingle", "x"
+            )
             sigs = raw.filter(F.col("shingle").isNull()).select(
                 "doc_id", "signature"
             )

@@ -173,15 +173,21 @@ def _maximal_runs(
       corpora, including the driver tables — skips everything below,
       keeping the plan fully lazy with zero extra materialization.
     * Level 2: an adjacency probe on the materialized run table (two
-      equi-joins against the exact empty-line set, limit 1) decides
-      whether the empty-run window, both left joins, and the merge
-      window actually run (the round-3 unconditional pass cost
-      ~0.5-0.9 s at sf0.1 for nothing on empty-free corpora)."""
+      equi-joins against the exact empty-line set) decides whether the
+      empty-run window, both left joins, and the merge window actually
+      run (the round-3 unconditional pass cost ~0.5-0.9 s at sf0.1 for
+      nothing on empty-free corpora).
+
+    Both probes are ``isEmpty()`` (a CollectLimit take), not
+    ``limit(1).count()``: a codegen'd LocalLimit names its counter
+    field from a JVM-global sequence, so its class never hits the
+    codegen cache and was re-compiled on every call (4 classes per
+    ``duplicate_blocks_resolved`` call, BENCH.md "codegen cache")."""
     if docs is not None:
         ws_line = docs.filter(
             F.col(text_col).rlike(r"(?m)^[ \t\f\x0B\r]*$")
-        ).limit(1)
-        if not ws_line.count():
+        )
+        if ws_line.isEmpty():
             w0 = Window.partitionBy("da", "db", "delta").orderBy("la")
             return (
                 pairs.withColumn("delta", F.col("la") - F.col("lb"))
@@ -226,9 +232,8 @@ def _maximal_runs(
             ),
             ["db", "end_b"],
         )
-        .limit(1)
     )
-    if not probe.count():
+    if probe.isEmpty():
         return base.select(
             "da",
             "db",

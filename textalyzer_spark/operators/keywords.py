@@ -111,7 +111,12 @@ def _doc_term_counts(
     distinct token), exactly ``explode(_ws_tokens) -> groupBy(doc_id,
     tok).count()`` with no explode and no shuffle (per-doc counting
     needs no cross-partition merge). Tokenization is Python ``re``
-    over the pinned ``alphabet.WS_SPLIT``."""
+    over the pinned ``alphabet.WS_SPLIT``.
+
+    Precondition: ``doc_id`` is unique per input row. The kernel
+    counts per ROW, so two rows sharing an id yield duplicate
+    ``(doc_id, tok)`` rows and double-count document frequency
+    downstream (the groupBy it replaced merged them)."""
     import re
     from collections import Counter
     from collections.abc import Iterator

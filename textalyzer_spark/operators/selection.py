@@ -77,7 +77,11 @@ def _doc_bucket_counts(
     tokenization is Python ``re`` over the pinned
     ``alphabet.WS_SPLIT`` — the identities already pinned for
     :func:`dsir_score_stateless`. Row-set identical to
-    ``_doc_features`` → hash → groupBy(doc_id, bucket)."""
+    ``_doc_features`` → hash → groupBy(doc_id, bucket).
+
+    Precondition: ``doc_id`` is unique per input row. The kernel
+    counts per ROW, so two rows sharing an id yield duplicate
+    ``(doc_id, bucket)`` rows and that document is counted twice."""
     import hashlib
     import re
     from collections import Counter

@@ -103,7 +103,11 @@ def _doc_shingle_counts(
     construction) — no expand/two-phase distinct aggregate. Sums
     reproduce ``doc_shingles`` → groupBy exactly.
     ``with_doc_id=True`` prepends the ``doc_id`` column for callers
-    that roll back up per document (bigram_novelty)."""
+    that roll back up per document (bigram_novelty).
+
+    Precondition: ``doc_id`` is unique per input row. The kernel
+    counts per ROW, so two rows sharing an id emit the same shingle
+    twice and ``n_docs`` counts that document twice."""
     from collections import Counter
     from collections.abc import Iterator
 
