@@ -16,7 +16,10 @@ DEDUP_GATES = (
 def test_codegen_cache_holds_the_dedup_gates(spark):
     """A warm pass of the three dedup gates reuses their generated
     classes. With Spark's default 100-entry cache the gates' ~255
-    classes evict each other and a warm pass compiles them all again."""
+    classes evict each other and a warm pass compiles them all again.
+    A warm pass can still compile a few AQE plan variants, which depend
+    on which query stage finishes first; the bound leaves room for them
+    on a busy host and still fails at ~255."""
     qs = entrymod.queries()
 
     def run_gates():
@@ -27,4 +30,4 @@ def test_codegen_cache_holds_the_dedup_gates(spark):
     before = codegen_compile_count(spark)
     run_gates()
     compiled = codegen_compile_count(spark) - before
-    assert compiled <= 8, f"warm pass compiled {compiled} classes"
+    assert compiled <= 32, f"warm pass compiled {compiled} classes"

@@ -127,7 +127,7 @@ def connected_components(
     ).localCheckpoint()
     docs = docs.localCheckpoint()
     labels = docs.select("doc_id", F.col("doc_id").alias("component"))
-    changed = True
+    changed = 1
     for _ in range(max_iters):
         msgs = (
             edges.join(labels, edges["src"] == labels["doc_id"])
@@ -138,19 +138,18 @@ def connected_components(
             .groupBy("doc_id")
             .agg(F.min("component").alias("component"))
         )
-        # isEmpty, not limit(1).count(): a codegen'd LocalLimit is a
-        # fresh class per plan (see duplication._maximal_runs)
-        changed = not (
+        changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "doc_id")
             .filter(F.col("n.component") != F.col("o.component"))
-            .isEmpty()
+            .limit(1)
+            .count()
         )
         labels = new_labels
-        if not changed:
+        if changed == 0:
             break
         labels = labels.localCheckpoint()  # cut the iterative lineage
-    if changed:
+    if changed != 0:
         # silent non-convergence would hand back non-minimal labels
         # for components with diameter > max_iters (VERDICT r5 nit 1)
         raise RuntimeError(
